@@ -13,6 +13,7 @@ this module too (added incrementally). Design rules for 100 TB:
 from __future__ import annotations
 
 import logging
+import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window
@@ -268,6 +269,23 @@ def _verified_jaccard_pairs(cand: DataFrame, sh_left: DataFrame,
     return scored.filter(F.col("jaccard") >= threshold)
 
 
+def _threshold_6dp(fn: str, threshold: float):
+    """``threshold`` as the exact DECIMAL the pruning bounds use. They
+    work in 6-dp units while the verify compares the raw float, so a
+    finer threshold would prune on one value and verify on another —
+    refused loudly instead."""
+    from decimal import Decimal
+
+    t = Decimal(str(threshold))
+    t6 = t.quantize(Decimal("0.000001"))
+    if t != t6:
+        raise ValueError(
+            f"{fn}: threshold {threshold!r} has more than 6 decimal "
+            "places; the exact pruning bounds work in 6-dp units, so "
+            "round it to 6 dp")
+    return t6
+
+
 def prefix_filter_jaccard_pairs(df: DataFrame, text_col: str = "text",
                                 id_col: str = "doc_id",
                                 k: int = DEFAULT_SHINGLE_K,
@@ -295,6 +313,7 @@ def prefix_filter_jaccard_pairs(df: DataFrame, text_col: str = "text",
     true J = 3/5 subset pair — a silent false negative that only shows
     up on adversarial set sizes. The trailing verify join removes prefix
     false positives, so the output is exactly { (x, y) : J >= t }.
+    The bounds work in 6-dp units, so a finer threshold raises.
 
     The global frequency table grows with vocabulary (Heaps' law), so it
     joins shuffle_hash, never broadcast — same rule as tf_idf (r07).
@@ -320,7 +339,8 @@ def prefix_filter_jaccard_pairs(df: DataFrame, text_col: str = "text",
     """
     from decimal import Decimal
 
-    t = F.lit(Decimal(str(threshold)).quantize(Decimal("0.000001")))
+    td = _threshold_6dp("prefix_filter_jaccard_pairs", threshold)
+    t = F.lit(td)
     sh = _persist(shingled(df, text_col, id_col, k))
     tok = sh.select(F.col(id_col), F.size("hs").alias("n"),
                     F.explode("hs").alias("t"))
@@ -340,13 +360,9 @@ def prefix_filter_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # the triangle_counts DECIMAL(38,0) integer-division discipline).
     s_units = 10 ** 6
     p_int = (F.lit(2).cast("decimal(38,0)")
-             * F.lit(int(Decimal(str(threshold))
-                         .quantize(Decimal("0.000001")) * s_units))
-             .cast("decimal(38,0)")
+             * F.lit(int(td * s_units)).cast("decimal(38,0)")
              * F.col("n").cast("decimal(38,0)"))
-    q_int = F.lit(int((Decimal("1") + Decimal(str(threshold))
-                       .quantize(Decimal("0.000001"))) * s_units)) \
-        .cast("decimal(38,0)")
+    q_int = F.lit(int((Decimal("1") + td) * s_units)).cast("decimal(38,0)")
     num = p_int + q_int - F.lit(1).cast("decimal(38,0)")
     alpha_min = ((num - num % q_int) / q_int).cast("long")
     a = prefix.select(F.col(id_col).alias("id1"), F.col("n").alias("n1"),
@@ -409,9 +425,10 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     The PPJoin-style positional bound 1 + min(n1-p1, n2-p2) >= t*n1
     prunes matched-token rows before the pair distinct. No length
     filter — containment has none, which is the point. Bounds are
-    DECIMAL-exact (see prefix_filter_jaccard_pairs on why double ceil
-    silently drops boundary pairs). Verify is set-exact over the
-    shingle sets; the DuckDB oracle generates candidates independently
+    DECIMAL-exact in 6-dp units (see prefix_filter_jaccard_pairs on
+    why double ceil silently drops boundary pairs; finer thresholds
+    raise). Verify is set-exact over the shingle sets; the DuckDB
+    oracle generates candidates independently
     (any-shared-token join, no prefix/positional pruning), so a hash
     match certifies the pruning emitted the complete answer.
 
@@ -421,9 +438,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     Frequency table joins shuffle_hash (Heaps'-law growth, same rule as
     tf_idf); verify arrays ship as int32.
     """
-    from decimal import Decimal
-
-    t = F.lit(Decimal(str(threshold)).quantize(Decimal("0.000001")))
+    t = F.lit(_threshold_6dp("containment_pairs", threshold))
     sh = _persist(shingled(df, text_col, id_col, k))
     tok = sh.select(F.col(id_col), F.size("hs").alias("n"),
                     F.explode("hs").alias("t"))
@@ -786,19 +801,11 @@ def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
     surviving marker would declare complete; the marker goes through
     the Hadoop FileSystem API (not driver-local open()/os.path), so the
     guard holds for non-local store_dirs too (ADVICE r08)."""
-    import os
-
     from airline_data_warehouse_spark.operators import similarity as sim
 
     spark = docs.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    marker = jvm.org.apache.hadoop.fs.Path(os.path.join(store_dir, "_built"))
-    fs = marker.getFileSystem(conf)
-    if fs.exists(marker):
-        if not overwrite:
-            return
-        fs.delete(marker, False)
+    if _store_built(spark, store_dir, overwrite):
+        return
     d = docs.filter(F.col(text_col).isNotNull())
     (d.select(F.md5(text_col).alias("text_md5"), F.col(id_col))
       .groupBy("text_md5").agg(F.min(id_col).alias("keeper"))
@@ -820,9 +827,7 @@ def cascade_store_build(docs: DataFrame, emb: DataFrame, store_dir: str,
        .write.mode("overwrite").parquet(os.path.join(store_dir, "emb_bands")))
     (ev.select("vec_id", "v", sim._norm(F.col("v")).alias("n"))
        .write.mode("overwrite").parquet(os.path.join(store_dir, "vectors")))
-    out = fs.create(marker, True)
-    out.write(bytearray(b"ok\n"))
-    out.close()
+    _mark_built(spark, store_dir)
 
 
 def incremental_cascade(spark, store_dir: str, inc_docs: DataFrame,
@@ -858,8 +863,6 @@ def incremental_cascade(spark, store_dir: str, inc_docs: DataFrame,
     Cite: cascade semantics mirror plans/llmops.dedup_cascade (the
     from-scratch batch form); the driver certifies this operator's
     store-mediated answer equals DuckDB recomputing from raw tables."""
-    import os
-
     # recursiveFileLookup: a store written by the STREAMING cascade
     # ingest is tiered (b{N}/ + c{lo}_{hi}/ subdirs, r15 — the shared-
     # state contract lets a stream and this batch job hand the same
@@ -1288,17 +1291,31 @@ def exact_substring_spans_incremental(corpus: DataFrame,
         _token_arrays(increment, text_col, id_col, "inc_id", "_wb"))
 
 
-def _es_store_fs(spark, store_dir: str):
-    """(Path-factory, FileSystem) for an ExactSubstr store dir — the
-    Hadoop FileSystem API, so markers hold for non-local stores (the
-    cascade_store_build convention)."""
-    import os
+def _store_built(spark, store_dir: str, overwrite: bool) -> bool:
+    """The store-build ``_built`` marker protocol, shared by
+    `cascade_store_build` and `exact_substring_store_build`: True when
+    a complete store exists and is to be reused. An ``overwrite``
+    rebuild deletes the marker FIRST, so a mid-rebuild crash leaves a
+    markerless (rebuildable) store, never a half-new one the old
+    marker would declare complete; `_mark_built` writes it LAST."""
+    from airline_data_warehouse_spark.sources.atomic import _fs
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    mk = lambda *parts: jvm.org.apache.hadoop.fs.Path(  # noqa: E731
-        os.path.join(store_dir, *parts))
-    return mk, mk("_built").getFileSystem(conf)
+    hpath, fs = _fs(spark, store_dir)
+    marker = hpath(store_dir, "_built")
+    if not fs.exists(marker):
+        return False
+    if overwrite:
+        fs.delete(marker, False)
+    return not overwrite
+
+
+def _mark_built(spark, store_dir: str) -> None:
+    from airline_data_warehouse_spark.sources.atomic import _fs
+
+    hpath, fs = _fs(spark, store_dir)
+    out = fs.create(hpath(store_dir, "_built"), True)
+    out.write(bytearray(b"ok\n"))
+    out.close()
 
 
 def exact_substring_store_build(corpus: DataFrame, store_dir: str,
@@ -1352,23 +1369,20 @@ def exact_substring_store_build(corpus: DataFrame, store_dir: str,
     increment-time decision from hashstats + the batch's own
     counts."""
     spark = corpus.sparkSession
-    mk, fs = _es_store_fs(spark, store_dir)
-    if fs.exists(mk("_built")):
-        if not overwrite:
-            kk, kdf, kocc = _es_store_meta(spark, store_dir)
-            if (kk, kdf, kocc) != (int(k), int(max_df), int(max_occ)):
-                raise ValueError(
-                    "exact_substring_store_build(overwrite=False): "
-                    f"the existing store at {store_dir!r} was built "
-                    f"under plan (k={kk}, max_df={kdf}, "
-                    f"max_occ={kocc}) but this call asked for "
-                    f"(k={int(k)}, max_df={int(max_df)}, "
-                    f"max_occ={int(max_occ)}) — reusing it silently "
-                    "would answer under a plan the caller never "
-                    "chose; pass overwrite=True to rebuild, or the "
-                    "stored plan to reuse")
-            return
-        fs.delete(mk("_built"), False)
+    if _store_built(spark, store_dir, overwrite):
+        kk, kdf, kocc = _es_store_meta(spark, store_dir)
+        if (kk, kdf, kocc) != (int(k), int(max_df), int(max_occ)):
+            raise ValueError(
+                "exact_substring_store_build(overwrite=False): "
+                f"the existing store at {store_dir!r} was built "
+                f"under plan (k={kk}, max_df={kdf}, "
+                f"max_occ={kocc}) but this call asked for "
+                f"(k={int(k)}, max_df={int(max_df)}, "
+                f"max_occ={int(max_occ)}) — reusing it silently "
+                "would answer under a plan the caller never "
+                "chose; pass overwrite=True to rebuild, or the "
+                "stored plan to reuse")
+        return
     wins = _persist(_token_window_hashes(corpus, text_col, id_col, k))
     stats = wins.groupBy("wh").agg(
         F.count_distinct(F.col(id_col)).alias("n_docs"),
@@ -1384,19 +1398,19 @@ def exact_substring_store_build(corpus: DataFrame, store_dir: str,
             "it; run the repetition filter (text_repetition_filter / "
             "remove_repeated_spans) over the corpus first, or raise "
             "max_occ deliberately")
-    wins.write.mode("overwrite").parquet(str(mk("windows")))
-    stats.write.mode("overwrite").parquet(str(mk("hashstats")))
+    wins.write.mode("overwrite").parquet(os.path.join(store_dir, "windows"))
+    stats.write.mode("overwrite").parquet(
+        os.path.join(store_dir, "hashstats"))
     (_token_arrays(corpus, text_col, id_col, id_col, "toks")
-     .write.mode("overwrite").parquet(str(mk("tokens"))))
+     .write.mode("overwrite").parquet(os.path.join(store_dir, "tokens")))
     from airline_data_warehouse_spark.operators.frames import (
         jvm_local_frame,
     )
     (jvm_local_frame(spark, [(int(k), int(max_df), int(max_occ))],
                      "k int, max_df int, max_occ int")
-     .coalesce(1).write.mode("overwrite").parquet(str(mk("meta"))))
-    out = fs.create(mk("_built"), True)
-    out.write(bytearray(b"ok\n"))
-    out.close()
+     .coalesce(1).write.mode("overwrite")
+     .parquet(os.path.join(store_dir, "meta")))
+    _mark_built(spark, store_dir)
     release_caches()
 
 
@@ -1405,13 +1419,12 @@ def _es_store_meta(spark, store_dir: str) -> tuple[int, int, int]:
     store without its `_built` marker (half-built stores are rebuilt,
     never half-read — the cascade marker contract). Reads a pre-fix
     2-column sidecar (k, max_occ) with max_df defaulted to 16."""
-    mk, fs = _es_store_fs(spark, store_dir)
-    if not fs.exists(mk("_built")):
+    if not _store_built(spark, store_dir, overwrite=False):
         raise ValueError(
             f"exact_substring store at {store_dir!r} has no _built "
             "marker — build it with exact_substring_store_build "
             "(a missing marker means a crashed or absent build)")
-    row = spark.read.parquet(str(mk("meta"))).collect()[0]
+    row = spark.read.parquet(os.path.join(store_dir, "meta")).collect()[0]
     d = row.asDict()
     return (int(d["k"]), int(d.get("max_df", 16)), int(d["max_occ"]))
 
@@ -1455,15 +1468,14 @@ def exact_substring_spans_store(spark, store_dir: str,
     present in the store RAISES — the df sum would silently
     double-count it."""
     k, max_df, max_occ = _es_store_meta(spark, store_dir)
-    mk, _ = _es_store_fs(spark, store_dir)
     # hashstats holds DELTA rows (one per hash per build/append) —
     # readers sum per hash, the linear-state convention; with the
     # disjoint-id contract the summed distinct-doc counts equal the
     # recompute twin's count over the unioned corpus
-    stats = (spark.read.parquet(str(mk("hashstats")))
+    stats = (spark.read.parquet(os.path.join(store_dir, "hashstats"))
              .groupBy("wh").agg(F.sum("n_docs").alias("n_docs"),
                                 F.sum("n_occ").alias("n_occ")))
-    toks = spark.read.parquet(str(mk("tokens")))
+    toks = spark.read.parquet(os.path.join(store_dir, "tokens"))
     iw = _persist(_token_window_hashes(increment, text_col, id_col, k))
     clash = (toks.join(increment.select(F.col(id_col)).distinct(),
                        id_col, "left_semi")
@@ -1496,7 +1508,7 @@ def exact_substring_spans_store(spark, store_dir: str,
             "Intra-document repetition: run the repetition filter "
             "on the increment; legitimate accumulation across "
             "<= max_df documents: raise max_occ deliberately")
-    a = (spark.read.parquet(str(mk("windows")))
+    a = (spark.read.parquet(os.path.join(store_dir, "windows"))
          .join(good.select("wh"), "wh", "left_semi")
          .select("wh", F.col(id_col).alias("corpus_id"),
                  F.col("pos").alias("pa")))
@@ -1542,8 +1554,7 @@ def exact_substring_store_append(spark, store_dir: str,
     increment. On a raise after a crash, re-id or rebuild the store
     (the error says so)."""
     k, _max_df, _max_occ = _es_store_meta(spark, store_dir)
-    mk, _fs = _es_store_fs(spark, store_dir)
-    clash = (spark.read.parquet(str(mk("tokens")))
+    clash = (spark.read.parquet(os.path.join(store_dir, "tokens"))
              .join(increment.select(F.col(id_col)).distinct(), id_col,
                    "left_semi").limit(1).count())
     if clash:
@@ -1559,12 +1570,12 @@ def exact_substring_store_append(spark, store_dir: str,
     # tokens FIRST (arms the retry guard), stats second, windows LAST
     # — see the crash contract above
     (_token_arrays(increment, text_col, id_col, id_col, "toks")
-     .write.mode("append").parquet(str(mk("tokens"))))
+     .write.mode("append").parquet(os.path.join(store_dir, "tokens")))
     (iw.groupBy("wh").agg(
         F.count_distinct(F.col(id_col)).alias("n_docs"),
         F.count(F.lit(1)).alias("n_occ"))
-     .write.mode("append").parquet(str(mk("hashstats"))))
-    iw.write.mode("append").parquet(str(mk("windows")))
+     .write.mode("append").parquet(os.path.join(store_dir, "hashstats")))
+    iw.write.mode("append").parquet(os.path.join(store_dir, "windows"))
     release_caches()
 
 

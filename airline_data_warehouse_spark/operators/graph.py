@@ -384,7 +384,7 @@ def triangle_counts(edges: DataFrame,
     bounded by min(|N+(u)|, |N+(v)|) ≤ O(sqrt(|E|)) — the same
     Suri–Vassilvitskii bound, with the E^1.5 term moved from shuffled
     rows to in-row array scans. Measured at sf0.1: 24.6 s → 9.3 s
-    median-of-5, identical 1000-row output (tools/opt_experiments.py).
+    median-of-5, identical 1000-row output (OPTIMIZATION_r15.md).
 
     Clustering coefficient in integer micro-units (the module's exact
     rule): cc = halfup(2·T·1e12, d·(d−1)) for d ≥ 2, 0 below.

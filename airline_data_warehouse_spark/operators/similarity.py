@@ -1942,7 +1942,7 @@ def _cov_cells(centered: DataFrame, dims: int, round_dp: int = 6) -> DataFrame:
     two 6-dp doubles cast to DECIMAL(38,12) IS the exact 12-dp decimal
     product (the established exactness argument), and integer units
     replicate it exactly — measured identical at sf0.1 and 0.93 s vs
-    7.19 s median-of-5 (tools/opt_experiments.py).
+    7.19 s median-of-5 (OPTIMIZATION_r15.md).
 
     ``round_dp``: output rounding — 6 for the exact covariance
     contract, 9 for the whiten-invariants fit, 3 for its Gram."""

@@ -3645,9 +3645,8 @@ SELECT token, est_count FROM cms_est
                 "upgraded from pytest to the driver gate).",
 )
 def stream_countmin_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from airline_data_warehouse_spark.operators import sketches as sk
     from airline_data_warehouse_spark.streaming.sketch import (
-        read_countmin_store,
+        countmin_store_estimate,
         start_countmin_ingest,
     )
 
@@ -3672,10 +3671,9 @@ def stream_countmin_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    sketch = read_countmin_store(spark, f"{work}/store")
     probes = (_toks(docs).filter(F.col("doc_id") % 97 == 0)
               .select("token").distinct())
-    return sk.countmin_estimate(sketch, probes)
+    return countmin_store_estimate(spark, f"{work}/store", probes)
 
 
 @register(

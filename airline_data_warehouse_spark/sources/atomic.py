@@ -1,16 +1,29 @@
 """Crash-safe plain-parquet table mutation: partition-scoped
 stage-then-swap, shared by the streaming eligibility merge
-(streaming/status.py) and the generalized batch upsert below.
+(streaming/status.py), the generalized batch upsert below, and every
+store that rewrites a directory wholesale (compaction, sketch folds).
 
-Protocol (per partition directory): the replacement is fully written to
-a SIBLING staging directory while the destination is still only being
-read, then swapped in with two renames — dest → hidden
-``.name.replaced`` backup, staging → dest. Renames are atomic on HDFS
-and local filesystems and dot-prefixed directories are invisible to
-Spark's parquet reader, so at every instant each partition is either
-completely-old or completely-new. `recover_partitions` rolls back any
-partition a crash stranded between the two renames; mutation bodies are
-idempotent, so a checkpointed/driver retry after recovery converges.
+One crash contract covers every mutation here. The replacement is
+fully written to a SIBLING staging directory while the destination is
+still only being read; then `_swap` moves it in with two renames —
+dest → hidden ``.name.replaced`` backup, staging → dest — and deletes
+the backup (a drop is the same step without the second rename).
+Renames are atomic on HDFS and local filesystems and dot-prefixed
+directories are invisible to Spark's parquet reader, so at every
+instant each destination is either completely old or completely new.
+`_heal` undoes a crash between the renames: a backup whose
+destination is missing is the only copy and is renamed back; a backup
+whose destination exists is a leftover and is deleted. `recover_*`
+runs it before any read that precedes a mutation, and mutation bodies
+are idempotent, so a checkpointed or caller retry after recovery
+converges. Rollback is conservative for drops too: a partition a
+crashed run had emptied comes back whole and the retry re-empties it.
+
+Single-maintenance-process: one writer mutates a table at a time.
+Readers may heal concurrently; if a reader's heal restores the old
+destination between a swap's two renames, `_swap` reports it and the
+caller treats the mutation as not done (the retry re-derives it).
+
 Object stores without atomic rename (S3) should use a transactional
 format (Delta/Iceberg MERGE) instead — these helpers are the
 plain-parquet path for real filesystems, and a Delta MERGE drops in
@@ -30,29 +43,67 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+_BACKUP = ".replaced"
+
 
 def _fs(spark: SparkSession, path: str):
+    """(Hadoop Path class, FileSystem of ``path``) — the one place the
+    package touches the Hadoop FileSystem API, so every store works on
+    non-local filesystems."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
     return hpath, hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    hpath, fs = _fs(spark, path)
+    return fs.exists(hpath(path))
+
+
+def _backup(hpath, dest):
+    """The hidden sibling a swap parks ``dest`` (a Hadoop Path) in."""
+    return hpath(dest.getParent(), f".{dest.getName()}{_BACKUP}")
+
+
+def _swap(hpath, fs, staging, dest) -> bool:
+    """Move ``staging`` onto ``dest`` (Hadoop Paths; ``staging=None``
+    drops ``dest``) under the module's crash contract. Returns False
+    only when a reader's `_heal` put the old ``dest`` back mid-swap —
+    the staged copy is then deleted and nothing changed."""
+    backup = _backup(hpath, dest)
+    fs.delete(backup, True)  # leftover of a crashed earlier swap
+    parked = fs.exists(dest)
+    if parked and not fs.rename(dest, backup):
+        raise IOError(f"swap: rename {dest} -> {backup} failed")
+    if staging is None:
+        # a drop: a backup that vanished was renamed back by a reader
+        return not parked or fs.delete(backup, True)
+    if not fs.rename(staging, dest):
+        if fs.exists(dest) and not fs.exists(backup):
+            fs.delete(staging, True)
+            return False
+        raise IOError(f"swap: rename {staging} -> {dest} failed")
+    fs.delete(backup, True)
+    return True
+
+
+def _heal(fs, backup, dest) -> None:
+    """Settle a ``backup`` a crashed `_swap` left behind (module
+    docstring). A failed rename with ``dest`` present is the benign
+    race with a live swap whose second rename just landed: the backup
+    is then a leftover too."""
+    if not fs.exists(dest) and fs.rename(backup, dest):
+        return
+    if not fs.exists(dest):
+        raise IOError(f"recovery: rename {backup} -> {dest} failed")
+    fs.delete(backup, True)
+
+
 def recover_partitions(spark: SparkSession, dest_root: str,
                        partition_col: str) -> None:
-    """Roll back any partition stranded mid-swap by a crash.
-
-    A crash in the window between `swap_partitions`' two renames leaves
-    the partition's ONLY copy in the hidden backup — invisible to
-    Spark's reader, so a retry that reads the table before recovery
-    would treat those rows as gone. Run this before any read that
-    precedes a swap: a backup whose destination is missing is renamed
-    back (rollback to the old, complete partition); a backup whose
-    destination exists is a leftover from a crash after the second
-    rename and is safely deleted (dest already holds the new data).
-    Rollback is CONSERVATIVE for deletions too: a partition the crashed
-    run had emptied comes back whole, and the idempotent retry
-    re-empties it.
-    """
+    """`_heal` every partition of ``dest_root`` a crash stranded
+    mid-swap. Run it before any read that precedes a swap: until then
+    a stranded partition's only copy is hidden from Spark's reader."""
     hpath, fs = _fs(spark, dest_root)
     root = hpath(dest_root)
     if not fs.exists(root):
@@ -60,56 +111,34 @@ def recover_partitions(spark: SparkSession, dest_root: str,
     prefix = "." + partition_col + "="
     for status in fs.listStatus(root):
         name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(prefix)
-                and name.endswith(".replaced")):
-            continue
-        dest = hpath(dest_root, name[1:-len(".replaced")])
-        if fs.exists(dest):
-            fs.delete(status.getPath(), True)  # new data already in place
-        elif not fs.rename(status.getPath(), dest):
-            raise IOError(f"partition recovery: rename {name} -> {dest} failed")
+        if (status.isDirectory() and name.startswith(prefix)
+                and name.endswith(_BACKUP)):
+            _heal(fs, status.getPath(),
+                  hpath(dest_root, name[1:-len(_BACKUP)]))
 
 
 def swap_partitions(spark: SparkSession, staging: str, dest_root: str,
                     partition_col: str,
                     drop_partitions: list[str] | None = None) -> None:
-    """Swap every fully-written staging partition directory into the
-    destination (two atomic renames each, see module docstring), then
-    remove ``drop_partitions`` (directory names like ``col=value``) that
-    the mutation emptied — same backup-then-delete protocol, so a crash
-    mid-removal is rolled back conservatively by `recover_partitions`.
-    A crash between partitions leaves a mixed but internally-consistent
-    table which the idempotent retry converges.
-    """
+    """`_swap` every fully-written staging partition directory into the
+    destination, then drop ``drop_partitions`` (directory names like
+    ``col=value``) that the mutation emptied. A crash between
+    partitions leaves a mixed but internally-consistent table which the
+    idempotent retry converges. Raises when a reader's heal undid a
+    swap, so merged rows are never silently dropped."""
     recover_partitions(spark, dest_root, partition_col)
     hpath, fs = _fs(spark, dest_root)
     prefix = partition_col + "="
-    seen = set()
-    for status in fs.listStatus(hpath(staging)):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(prefix)):
-            continue  # _SUCCESS and friends
-        seen.add(name)
-        dest = hpath(dest_root, name)
-        backup = hpath(dest_root, f".{name}.replaced")
-        if fs.exists(backup):
-            fs.delete(backup, True)  # leftover from a crashed prior swap
-        if fs.exists(dest) and not fs.rename(dest, backup):
-            raise IOError(f"partition swap: rename {dest} -> {backup} failed")
-        if not fs.rename(status.getPath(), dest):
-            raise IOError(f"partition swap: rename into {dest} failed")
-        fs.delete(backup, True)
+    moves = {st.getPath().getName(): st.getPath()
+             for st in fs.listStatus(hpath(staging))
+             if st.isDirectory() and st.getPath().getName().startswith(prefix)}
     for name in drop_partitions or []:
-        if name in seen or not name.startswith(prefix):
-            continue
-        dest = hpath(dest_root, name)
-        backup = hpath(dest_root, f".{name}.replaced")
-        if fs.exists(backup):
-            fs.delete(backup, True)
-        if fs.exists(dest):
-            if not fs.rename(dest, backup):
-                raise IOError(f"partition drop: rename {dest} -> {backup} failed")
-            fs.delete(backup, True)
+        if name.startswith(prefix):
+            moves.setdefault(name, None)
+    for name, src in moves.items():
+        if not _swap(hpath, fs, src, hpath(dest_root, name)):
+            raise IOError(f"partition swap: a concurrent recovery restored "
+                          f"{dest_root}/{name} mid-swap; retry the merge")
     fs.delete(hpath(staging), True)
 
 
@@ -129,10 +158,8 @@ def upsert_parquet(spark: SparkSession, source: DataFrame, dest_path: str,
     matched key, so it is rewritten without the row — or dropped
     outright if that empties it) and its new partition receives it. A
     100 TB fact takes a few directory rewrites per delta, not a table
-    rewrite, and the table stays readable and whole at every instant.
-    Crash at any point → `recover_partitions` (run here before reading)
-    rolls the table back to a consistent state and the idempotent retry
-    converges.
+    rewrite, and the table stays readable and whole at every instant
+    (module docstring: one crash contract).
     """
     merge_parquet(spark, source, dest_path, key, partition_col,
                   delete_condition=None, sort_within=sort_within)
@@ -150,7 +177,7 @@ def merge_parquet(spark: SparkSession, source: DataFrame, dest_path: str,
     the right-to-be-forgotten / tombstone operation a long-lived corpus
     needs: partition-scoped directory rewrites (a partition emptied by
     deletes is dropped atomically in the swap), never a table rewrite,
-    with the same recover-then-idempotent-retry crash contract.
+    under the module's crash contract.
 
     ``delete_condition``: Column or SQL string evaluated against SOURCE
     rows; None degrades to plain upsert.
@@ -217,8 +244,7 @@ def merge_parquet(spark: SparkSession, source: DataFrame, dest_path: str,
                  .join(keys, key, "left_anti"))
     merged = surviving.unionByName(inserts)
     staging = f"{dest_path.rstrip('/')}__upsert_staging"
-    if fs.exists(hpath(staging)):
-        fs.delete(hpath(staging), True)  # crashed prior attempt, pre-swap
+    fs.delete(hpath(staging), True)  # crashed prior attempt, pre-swap
     (_sorted(merged).write.mode("overwrite")
                     .partitionBy(partition_col).parquet(staging))
     drop = [f"{partition_col}={v}" for v in affected_vals]
@@ -280,13 +306,10 @@ def _check_partition_values_droppable(partition_col: str,
 def compact_partitions(spark: SparkSession, dest_path: str,
                        partition_col: str, target_files: int = 1,
                        max_files_ok: int | None = None) -> list[str]:
-    """Small-file compaction with the same crash-safe stage-then-swap:
-    every partition directory holding more parquet files than
-    ``max_files_ok`` (default: ``target_files``) is rewritten to
-    ``target_files`` files and atomically swapped in. Readers see each
-    partition either pre- or post-compaction at every instant; a crash
-    mid-compaction rolls back via `recover_partitions` and the retry is
-    idempotent (compaction changes layout, never rows).
+    """Small-file compaction through `swap_partitions`: every partition
+    directory holding more parquet files than ``max_files_ok``
+    (default: ``target_files``) is rewritten to ``target_files`` files
+    and swapped in. Layout-only, so the retry is idempotent.
 
     This is the maintenance job a 100 TB ingest needs: streaming
     appends and per-delta upserts accrete files per partition, and scan
@@ -315,8 +338,7 @@ def compact_partitions(spark: SparkSession, dest_path: str,
     if not crowded:
         return []
     staging = dest_path.rstrip("/") + ".compacting"
-    if fs.exists(hpath(staging)):
-        fs.delete(hpath(staging), True)
+    fs.delete(hpath(staging), True)  # crashed prior attempt, pre-swap
     # repartition BY THE PARTITION COLUMN (plus a salt when target_files
     # > 1): all rows of one partition value land in exactly target_files
     # tasks, so the partitioned write emits exactly that many files per
@@ -338,33 +360,12 @@ def compact_partitions(spark: SparkSession, dest_path: str,
 
 
 def recover_directory(spark: SparkSession, dest_path: str) -> None:
-    """Heal a directory stranded by a crash between compact_directory's
-    two renames — same hidden-backup convention as the streaming
-    stores' _recover_store_dir, at whole-directory granularity: a
-    backup whose destination is missing is the data's only copy (crash
-    after rename 1) and is renamed back; a backup whose destination
-    exists is a post-swap leftover (crash after rename 2) and is
-    deleted."""
-    import os
-
+    """`_heal` an unpartitioned directory a crash stranded mid-swap."""
     hpath, fs = _fs(spark, dest_path)
-    parent, name = os.path.split(dest_path.rstrip("/"))
-    backup = hpath(parent, f".{name}.replaced")
-    if not fs.exists(backup):
-        return
-    if fs.exists(hpath(dest_path)):
-        fs.delete(backup, True)
-    elif not fs.rename(backup, hpath(dest_path)):
-        # Benign race (ADVICE r11-low): a LIVE compactor's second rename
-        # (staging -> dest) can land between our existence check and
-        # this rename — dest now exists and the backup is an ordinary
-        # post-swap leftover, not a stranded sole copy. Only a rename
-        # failure with dest STILL missing is real corruption.
-        if fs.exists(hpath(dest_path)):
-            fs.delete(backup, True)
-        else:
-            raise IOError(f"directory recovery: rename {backup} -> "
-                          f"{dest_path} failed")
+    dest = hpath(dest_path)
+    backup = _backup(hpath, dest)
+    if fs.exists(backup):
+        _heal(fs, backup, dest)
 
 
 def compact_directory(spark: SparkSession, dest_path: str,
@@ -373,12 +374,8 @@ def compact_directory(spark: SparkSession, dest_path: str,
     """Small-file compaction for an UNPARTITIONED parquet directory —
     the append-log twin of compact_partitions: when the directory holds
     more ``.parquet`` files than ``max_files_ok`` (default:
-    ``target_files``), rewrite its rows to ``target_files`` files in a
-    sibling staging dir and swap the whole directory in with two atomic
-    renames (dest → hidden ``.name.replaced`` backup, staging → dest).
-    Readers see the old or the new directory at every instant; a crash
-    between the renames is healed by `recover_directory` (run here
-    first, and by readers before reads). Layout-only: rows unchanged.
+    ``target_files``), `replace_directory` rewrites its rows to
+    ``target_files`` files. Layout-only: rows unchanged.
 
     Single-maintenance-process contract (the cascade-store compactor's):
     an APPEND racing the swap window can land in the backup and be
@@ -396,85 +393,34 @@ def compact_directory(spark: SparkSession, dest_path: str,
             if f.getPath().getName().endswith(".parquet"))
     if n <= limit:
         return False
-    staging = dest_path.rstrip("/") + ".compacting"
-    if fs.exists(hpath(staging)):
-        fs.delete(hpath(staging), True)  # crashed prior attempt, pre-swap
-    (spark.read.parquet(dest_path).coalesce(target_files)
-          .write.mode("overwrite").parquet(staging))
-    import os
-
-    parent, name = os.path.split(dest_path.rstrip("/"))
-    backup = hpath(parent, f".{name}.replaced")
-    if fs.exists(backup):
-        fs.delete(backup, True)
-    if not fs.rename(root, backup):
-        raise IOError(f"directory compact: rename {dest_path} -> "
-                      f"{backup} failed")
-    if not fs.rename(hpath(staging), root):
-        # The mirror of recover_directory's benign race: a concurrent
-        # reader's recover saw dest missing mid-swap and renamed the
-        # backup back. The table is then fully restored to its
-        # pre-compaction contents — drop the staged copy and report no
-        # rewrite instead of failing the owning foreachBatch mid-flight.
-        # (The documented contract is still single-maintenance-process;
-        # this just makes the reader-side heal convergent, ADVICE
-        # r11-low.)
-        if fs.exists(root) and not fs.exists(backup):
-            fs.delete(hpath(staging), True)
-            return False
-        raise IOError(f"directory compact: rename {staging} -> "
-                      f"{dest_path} failed")
-    fs.delete(backup, True)
-    return True
+    return replace_directory(spark, spark.read.parquet(dest_path),
+                             dest_path, target_files)
 
 
 def replace_directory(spark: SparkSession, source: DataFrame,
                       dest_path: str, target_files: int = 1) -> bool:
     """Atomically replace an UNPARTITIONED parquet directory's CONTENT
-    with ``source`` — compact_directory's protocol (stage to a sibling,
-    two renames, recover_directory healing) generalized from
-    layout-only rewrites to new content. The building block for small
-    derived state a maintenance loop folds wholesale (a Count-Min base
-    sketch, a watermark table): the directory is schema-bounded, so a
-    full rewrite is cheap, and readers see the old or the new content
-    at every instant — never a mix, never a torn window.
+    with ``source`` (stage to a sibling, then `_swap`). The building
+    block for small derived state a maintenance loop folds wholesale (a
+    Count-Min base sketch, a watermark table): the directory is
+    schema-bounded, so a full rewrite is cheap, and readers see the old
+    or the new content at every instant.
 
     ``source`` is fully materialized into the staging directory BEFORE
     the first rename, so it may (and typically does) read from
-    ``dest_path`` itself. Same single-maintenance-process contract and
-    reader-race convergence as compact_directory.
+    ``dest_path`` itself. Same single-maintenance-process contract as
+    compact_directory.
 
-    Returns True when the new content is in place, False when the
-    reader-heal race restored the OLD content instead (the benign
-    no-op branch below). Callers whose follow-up work assumes the swap
-    happened — a fold deleting the batch partitions it just absorbed —
-    MUST check this: treating the no-op as success would destroy the
-    only copy of the unfolded state."""
+    Returns True when the new content is in place, False when a
+    reader's heal restored the OLD content instead. Callers whose
+    follow-up work assumes the swap happened — a fold deleting the
+    batch partitions it just absorbed — MUST check this: treating the
+    no-op as success would destroy the only copy of the unfolded
+    state."""
     recover_directory(spark, dest_path)
     hpath, fs = _fs(spark, dest_path)
-    root = hpath(dest_path)
     staging = dest_path.rstrip("/") + ".replacing"
-    if fs.exists(hpath(staging)):
-        fs.delete(hpath(staging), True)  # crashed prior attempt, pre-swap
+    fs.delete(hpath(staging), True)  # crashed prior attempt, pre-swap
     (source.coalesce(target_files)
            .write.mode("overwrite").parquet(staging))
-    import os
-
-    parent, name = os.path.split(dest_path.rstrip("/"))
-    backup = hpath(parent, f".{name}.replaced")
-    if fs.exists(backup):
-        fs.delete(backup, True)
-    if fs.exists(root) and not fs.rename(root, backup):
-        raise IOError(f"directory replace: rename {dest_path} -> "
-                      f"{backup} failed")
-    if not fs.rename(hpath(staging), root):
-        if fs.exists(root) and not fs.exists(backup):
-            # reader-heal race (the compact_directory convergence): the
-            # old content is fully back — drop the staged copy; the
-            # idempotent maintenance retry re-derives it
-            fs.delete(hpath(staging), True)
-            return False
-        raise IOError(f"directory replace: rename {staging} -> "
-                      f"{dest_path} failed")
-    fs.delete(backup, True)
-    return True
+    return _swap(hpath, fs, hpath(staging), hpath(dest_path))

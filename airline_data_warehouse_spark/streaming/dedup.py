@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from airline_data_warehouse_spark.sources.atomic import _exists, _fs
+
 
 def with_content_hash(df: DataFrame, text_col: str = "text") -> DataFrame:
     """md5 payload hash — the dedup key. One narrow column so the
@@ -55,19 +57,6 @@ def dedup_batch_exact(df: DataFrame, text_col: str = "text",
 
 
 
-def _store_dir_exists(spark, path: str) -> bool:
-    # Explicit existence probe via the Hadoop FileSystem API, instead of
-    # read-and-swallow: a transient/corrupt-store READ failure must fail
-    # the micro-batch (structured streaming retries it) rather than
-    # silently skipping near-dup detection for the whole batch while
-    # still appending its signatures — which would lose that batch's
-    # pairs permanently (ADVICE r06).
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(conf).exists(hpath)
-
-
 def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
                 retention_batches: int | None) -> DataFrame:
     """Read ONE signature store dir for classification, independently of
@@ -94,9 +83,12 @@ def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
       dedup-on-read story for the verdicts/pairs sinks honest.
 
     ``retention_batches`` applies the same horizon the compactor
-    enforces (see start_neardup_ingest).
+    enforces (see start_neardup_ingest). Existence is an explicit FS
+    probe, never read-and-swallow: a corrupt-store READ failure must
+    fail the micro-batch rather than silently skip detection while
+    still appending the batch's signatures (ADVICE r06).
     """
-    if not _store_dir_exists(spark, path):
+    if not _exists(spark, path):
         return empty_like.limit(0)
     # explicit schema (empty_like's plus the batch_id every store row
     # carries): spark.read.parquet() otherwise EAGERLY opens a footer
@@ -115,6 +107,19 @@ def _read_store(spark, path: str, empty_like: DataFrame, batch_id: int,
     return df
 
 
+def _append_tier(df: DataFrame, path: str, batch_id: int,
+                 files: int) -> None:
+    """Append one micro-batch's rows, stamped with their ``batch_id``,
+    to the ``b{N}`` subdir of a tiered store — the layout `_read_store`,
+    `_tier_list` and `_tier_compact` read. ``files`` coalesces the
+    append: a micro-batch's signatures are small, and one file per
+    shuffle partition per batch is where file-count growth (and with it
+    corpus-read latency) came from in the 50-batch probe. Append mode:
+    a replayed batch re-appends into its own b-dir; reads DISTINCT,
+    compaction dropDuplicates."""
+    (df.withColumn("batch_id", F.lit(batch_id)).coalesce(files)
+       .write.mode("append").parquet(f"{path}/b{int(batch_id)}"))
+
 
 def _tier_list(spark, path: str):
     """(hpath-factory, fs, {batch_id: b-dir name}, tier watermark,
@@ -123,8 +128,6 @@ def _tier_list(spark, path: str):
     subdirs, consolidated tiers in ``c{lo}_{hi}/``, and readers list
     both via one recursive scan (Spark hides dot/underscore-prefixed
     paths, so in-flight ``.c*.staging`` writes are invisible)."""
-    from airline_data_warehouse_spark.sources.atomic import _fs
-
     hpath, fs = _fs(spark, path)
     bdirs, tiers, cmax = {}, [], -1
     if fs.exists(hpath(path)):
@@ -331,7 +334,6 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
 
     from airline_data_warehouse_spark.operators.dedup import (
         minhash_band_table,
-        release_caches,
         shingled,
     )
 
@@ -343,6 +345,7 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
         spark = batch_df.sparkSession
         sh = shingled(batch_df, text_col, id_col).persist()
         new_bands = minhash_band_table(sh, id_col).persist()
+        held = [new_bands, sh]
         try:
             # each store dir probed INDIVIDUALLY; a dir missing because
             # batch 0 crashed between the sequential appends reads as
@@ -350,7 +353,7 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
             # the gate is a cheap FS probe — batch 0 (no store at all)
             # skips the corpus join; any partially-present sibling on a
             # retry reads as empty through _read_store instead
-            if _store_dir_exists(spark, bands_dir):
+            if _exists(spark, bands_dir):
                 corpus_bands = _read_store(spark, bands_dir, new_bands,
                                            batch_id, retention_batches)
                 cand = (new_bands.alias("i")
@@ -375,39 +378,29 @@ def start_neardup_ingest(stream: DataFrame, store_dir: str,
                 inter = F.size(F.array_intersect("sh1", "sh2"))
                 union = F.size("sh1") + F.size("sh2") - inter
                 # compute-once barrier before the threshold filter
-                # (r16, dedup._verified_jaccard_pairs rationale);
-                # released by the finally-block release_caches
-                from airline_data_warehouse_spark.operators.dedup import (
-                    _persist,
-                )
-                scored = _persist(
-                    cand.join(s1, "inc_id").join(s2, "corpus_id")
-                        .select("inc_id", "corpus_id",
-                                F.round(inter.cast("double") / union, 6)
-                                 .alias("jaccard")))
+                # (r16, dedup._verified_jaccard_pairs rationale); held
+                # locally so other queries' caches stay untouched
+                scored = (cand.join(s1, "inc_id").join(s2, "corpus_id")
+                          .select("inc_id", "corpus_id",
+                                  F.round(inter.cast("double") / union, 6)
+                                   .alias("jaccard"))
+                          .persist())
+                held.append(scored)
                 verified = scored.filter(F.col("jaccard") >= threshold)
                 (verified.withColumn("batch_id", F.lit(batch_id))
                          .write.mode("append").parquet(pairs_dir))
-            # coalesce the appends: a micro-batch's signatures are small,
-            # and writing one file per shuffle partition per batch is
-            # where baseline file-count growth (and with it corpus-read
-            # latency) came from in the 50-batch probe. The coalesce
-            # reads the PERSISTED frames, so the corpus join above keeps
-            # its full parallelism.
-            bid = int(batch_id)
-            (new_bands.withColumn("batch_id", F.lit(batch_id))
-                      .coalesce(4).write.mode("append")
-                      .parquet(f"{bands_dir}/b{bid}"))
-            (sh.withColumn("batch_id", F.lit(batch_id))
-               .coalesce(4).write.mode("append")
-               .parquet(f"{shingles_dir}/b{bid}"))
+            # the coalesced appends read the PERSISTED frames, so the
+            # corpus join above keeps its full parallelism
+            _append_tier(new_bands, bands_dir, batch_id, 4)
+            _append_tier(sh, shingles_dir, batch_id, 4)
             if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                _tier_compact(spark, bands_dir, bid, retention_batches)
-                _tier_compact(spark, shingles_dir, bid, retention_batches)
+                _tier_compact(spark, bands_dir, int(batch_id),
+                              retention_batches)
+                _tier_compact(spark, shingles_dir, int(batch_id),
+                              retention_batches)
         finally:
-            new_bands.unpersist()
-            sh.unpersist()
-            release_caches()
+            for df in held:
+                df.unpersist()
 
     writer = stream.writeStream.foreachBatch(ingest_batch)
     if checkpoint_dir:
@@ -453,7 +446,6 @@ def start_semantic_ingest(stream: DataFrame, store_dir: str,
     from pyspark.sql import functions as F
 
     from airline_data_warehouse_spark.operators import similarity as sim
-    from airline_data_warehouse_spark.operators.dedup import release_caches
 
     bands_dir = os.path.join(store_dir, "emb_bands")
     vectors_dir = os.path.join(store_dir, "vectors")
@@ -474,12 +466,13 @@ def start_semantic_ingest(stream: DataFrame, store_dir: str,
                      .select(id_col, F.col("band").cast("int").alias("band"),
                              "band_key")
                      .persist())
+        held = [new_vecs, new_bands]
         try:
             # cheap FS probe gates batch 0 only; a vectors dir stranded
             # missing by a crash between the two appends reads as empty
             # on retry instead of wedging the stream (_read_store,
             # ADVICE r08 medium)
-            if _store_dir_exists(spark, bands_dir):
+            if _exists(spark, bands_dir):
                 corpus_bands = _read_store(spark, bands_dir, new_bands,
                                            batch_id, retention_batches)
                 cand = (new_bands.alias("i")
@@ -501,31 +494,25 @@ def start_semantic_ingest(stream: DataFrame, store_dir: str,
                                 / (F.col("n1") * F.col("n2")), 6)
                 # compute-once barrier (r16): pushed into the join
                 # condition the 64-mult dot would evaluate twice per
-                # candidate; released by the finally-block release_caches
-                from airline_data_warehouse_spark.operators.dedup import (
-                    _persist,
-                )
-                scored = _persist(
-                    cand.join(v1, "inc_id").join(v2, "corpus_id")
-                        .select("inc_id", "corpus_id",
-                                score.alias("score")))
+                # candidate; held locally like new_vecs/new_bands
+                scored = (cand.join(v1, "inc_id").join(v2, "corpus_id")
+                          .select("inc_id", "corpus_id",
+                                  score.alias("score"))
+                          .persist())
+                held.append(scored)
                 flagged = scored.filter(F.col("score") >= threshold)
                 (flagged.withColumn("batch_id", F.lit(batch_id))
                         .write.mode("append").parquet(pairs_dir))
-            bid = int(batch_id)
-            (new_bands.withColumn("batch_id", F.lit(batch_id))
-                      .coalesce(4).write.mode("append")
-                      .parquet(f"{bands_dir}/b{bid}"))
-            (new_vecs.withColumn("batch_id", F.lit(batch_id))
-                     .coalesce(4).write.mode("append")
-                     .parquet(f"{vectors_dir}/b{bid}"))
+            _append_tier(new_bands, bands_dir, batch_id, 4)
+            _append_tier(new_vecs, vectors_dir, batch_id, 4)
             if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                _tier_compact(spark, bands_dir, bid, retention_batches)
-                _tier_compact(spark, vectors_dir, bid, retention_batches)
+                _tier_compact(spark, bands_dir, int(batch_id),
+                              retention_batches)
+                _tier_compact(spark, vectors_dir, int(batch_id),
+                              retention_batches)
         finally:
-            new_vecs.unpersist()
-            new_bands.unpersist()
-            release_caches()
+            for df in held:
+                df.unpersist()
 
     writer = stream.writeStream.foreachBatch(ingest_batch)
     if checkpoint_dir:
@@ -567,15 +554,18 @@ def start_cascade_ingest(stream: DataFrame, store_dir: str,
     shuffle_hash on every corpus-proportional side, finite-guarded
     vectors)."""
     import os
+    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
 
     from pyspark.sql import functions as F
 
     from airline_data_warehouse_spark.operators import similarity as sim
     from airline_data_warehouse_spark.operators.dedup import (
         _i32,
+        _persist,
+        cache_scope,
         cascade_classify,
         minhash_band_table,
-        release_caches,
         shingled,
     )
 
@@ -587,47 +577,51 @@ def start_cascade_ingest(stream: DataFrame, store_dir: str,
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        docs = batch_df.select(id_col, text_col).persist()
-        emb = batch_df.select(F.col(id_col).alias("vec_id"),
-                              F.col(vec_col)).persist()
-        sh = shingled(docs.filter(F.col(text_col).isNotNull()),
-                      text_col, id_col).persist()
-        ev = (batch_df.filter(sim._finite_ok(F.col(vec_col)))
-              .select(F.col(id_col).alias("vec_id"),
-                      F.transform(F.col(vec_col), lambda x: x.cast("double"))
-                       .alias("v"))
-              .persist())
-        # the batch's own signature frames — appended to the five stores
-        # below, and (as .limit(0)) the schema templates _read_store
-        # substitutes for a sibling dir stranded missing by a crash
-        # between the sequential appends (ADVICE r08 medium)
-        new_hashes = (docs.filter(F.col(text_col).isNotNull())
-                      .select(F.md5(text_col).alias("text_md5"),
-                              F.col(id_col))
-                      .groupBy("text_md5").agg(F.min(id_col).alias("keeper")))
-        new_bands = minhash_band_table(sh, id_col)
-        new_shingles = sh.select(id_col, _i32("hs").alias("hs"))
-        new_emb_bands = (ev.select("vec_id",
-                                   F.posexplode(F.array(*emb_keys))
-                                    .alias("band", "band_key"))
-                         .select("vec_id",
-                                 F.col("band").cast("int").alias("band"),
-                                 "band_key"))
-        new_vectors = ev.select("vec_id", "v", sim._norm(F.col("v")).alias("n"))
-        empty_like = {"hashes": new_hashes, "bands": new_bands,
-                      "shingles": new_shingles, "emb_bands": new_emb_bands,
-                      "vectors": new_vectors}
-        try:
+        # cache_scope frees every cache this batch registers (its own
+        # frames and cascade_classify's barriers) and leaves caches
+        # other queries registered alone
+        with cache_scope():
+            docs = _persist(batch_df.select(id_col, text_col))
+            emb = _persist(batch_df.select(F.col(id_col).alias("vec_id"),
+                                           F.col(vec_col)))
+            sh = _persist(shingled(docs.filter(F.col(text_col).isNotNull()),
+                                   text_col, id_col))
+            ev = _persist(batch_df.filter(sim._finite_ok(F.col(vec_col)))
+                          .select(F.col(id_col).alias("vec_id"),
+                                  F.transform(F.col(vec_col),
+                                              lambda x: x.cast("double"))
+                                   .alias("v")))
+            # the batch's own signature frames — appended to the five
+            # stores below, and (as .limit(0)) the schema templates
+            # _read_store substitutes for a sibling dir stranded missing
+            # by a crash between the appends (ADVICE r08 medium)
+            new_sigs = {
+                "hashes": (docs.filter(F.col(text_col).isNotNull())
+                           .select(F.md5(text_col).alias("text_md5"),
+                                   F.col(id_col))
+                           .groupBy("text_md5")
+                           .agg(F.min(id_col).alias("keeper"))),
+                "bands": minhash_band_table(sh, id_col),
+                "shingles": sh.select(id_col, _i32("hs").alias("hs")),
+                "emb_bands": (ev.select("vec_id",
+                                        F.posexplode(F.array(*emb_keys))
+                                         .alias("band", "band_key"))
+                              .select("vec_id",
+                                      F.col("band").cast("int")
+                                       .alias("band"),
+                                      "band_key")),
+                "vectors": ev.select("vec_id", "v",
+                                     sim._norm(F.col("v")).alias("n")),
+            }
             # gate on the FIRST-appended store only to detect a truly
             # fresh stream; each of the five reads probes its own dir
             # (crash-stranded siblings → empty, never a wedged retry)
-            if _store_dir_exists(spark, dirs["hashes"]):
+            if _exists(spark, dirs["hashes"]):
                 verdicts = cascade_classify(
                     docs, emb,
-                    *(_read_store(spark, dirs[n], empty_like[n], batch_id,
+                    *(_read_store(spark, dirs[name], frame, batch_id,
                                   retention_batches)
-                      for n in ("hashes", "bands", "shingles", "emb_bands",
-                                "vectors")),
+                      for name, frame in new_sigs.items()),
                     threshold=threshold, cos_threshold=cos_threshold,
                     text_col=text_col, id_col=id_col, vec_col=vec_col)
             else:
@@ -642,45 +636,24 @@ def start_cascade_ingest(stream: DataFrame, store_dir: str,
             # verdicts plan reads stores through _read_store's
             # batch_id < current filter (its file index was also listed
             # before any append lands), and signature appends commute
-            # with each other. Crash semantics are unchanged — ANY
-            # subset of the six may land before a crash, exactly as any
-            # prefix could before; retries re-append (duplicates removed
-            # at compaction / deduped on read) and re-classify
+            # with each other. ANY subset of the six may land before a
+            # crash; retries re-append (duplicates removed at
+            # compaction / deduped on read) and re-classify
             # identically. The first failure fails the micro-batch.
-            bid = F.lit(batch_id)
-            bsub = f"b{int(batch_id)}"
-            writes = [
-                (verdicts.withColumn("batch_id", bid), dirs["verdicts"]),
-                (new_hashes.withColumn("batch_id", bid),
-                 f"{dirs['hashes']}/{bsub}"),
-                (new_bands.withColumn("batch_id", bid),
-                 f"{dirs['bands']}/{bsub}"),
-                (new_shingles.withColumn("batch_id", bid),
-                 f"{dirs['shingles']}/{bsub}"),
-                (new_emb_bands.withColumn("batch_id", bid),
-                 f"{dirs['emb_bands']}/{bsub}"),
-                (new_vectors.withColumn("batch_id", bid),
-                 f"{dirs['vectors']}/{bsub}"),
-            ]
-            from concurrent.futures import ThreadPoolExecutor
+            writes = [lambda: (verdicts.withColumn("batch_id",
+                                                   F.lit(batch_id))
+                               .coalesce(4).write.mode("append")
+                               .parquet(dirs["verdicts"]))]
+            writes += [partial(_append_tier, frame, dirs[name], batch_id, 4)
+                       for name, frame in new_sigs.items()]
             with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-                futs = [pool.submit(
-                    lambda frame, path: frame.coalesce(4).write
-                    .mode("append").parquet(path), f, p)
-                    for f, p in writes]
-                for fut in futs:
+                for fut in [pool.submit(w) for w in writes]:
                     fut.result()   # propagate the first failure
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                for name in ("hashes", "bands", "shingles", "emb_bands",
-                             "vectors"):
+            if compact_every and batch_id > 0 \
+                    and batch_id % compact_every == 0:
+                for name in new_sigs:
                     _tier_compact(spark, dirs[name], int(batch_id),
                                   retention_batches)
-        finally:
-            docs.unpersist()
-            emb.unpersist()
-            sh.unpersist()
-            ev.unpersist()
-            release_caches()
 
     writer = stream.writeStream.foreachBatch(ingest_batch)
     if checkpoint_dir:
@@ -754,7 +727,6 @@ def start_exact_substring_ingest(stream: DataFrame, store_dir: str,
     from airline_data_warehouse_spark.operators.dedup import (
         _merged_spans,
         _token_window_hashes,
-        release_caches,
     )
 
     windows_dir = os.path.join(store_dir, "windows")
@@ -769,6 +741,7 @@ def start_exact_substring_ingest(stream: DataFrame, store_dir: str,
                   .agg(F.count_distinct(F.col(id_col)).alias("n_docs"),
                        F.count(F.lit(1)).alias("n_occ"))
                   .persist())
+        held = [bstats, bw]
         try:
             # no up-front recovery pass: the tiered protocol
             # (_tier_compact) never renames an existing dir away, so
@@ -793,6 +766,7 @@ def start_exact_substring_ingest(stream: DataFrame, store_dir: str,
                               + F.coalesce("_po", F.lit(0)))
                              .alias("_occ"))
                      .persist())
+            held.append(total)
             # one scalar pass serves BOTH stream-health checks
             # (ADVICE r14, both lows on this function):
             # * worst: the batch tier's max_occ contract, streamed —
@@ -854,32 +828,18 @@ def start_exact_substring_ingest(stream: DataFrame, store_dir: str,
                 .filter(F.col("corpus_id") != F.col("inc_id")),
                 k, min_tokens, "corpus_id", "inc_id",
                 "start_corpus", "start_inc")
-            # per-batch appends land in b{N} subdirs of the tiered
-            # layout (append mode: a replayed batch re-appends into
-            # its own b-dir; reads DISTINCT, compaction dropDuplicates)
-            bid = int(batch_id)
-            (spans.withColumn("batch_id", F.lit(batch_id))
-             .coalesce(4).write.mode("append")
-             .parquet(f"{spans_dir}/b{bid}"))
-            (bw.withColumn("batch_id", F.lit(batch_id))
-             .coalesce(4).write.mode("append")
-             .parquet(f"{windows_dir}/b{bid}"))
-            (bstats.withColumn("batch_id", F.lit(batch_id))
-             .coalesce(1).write.mode("append")
-             .parquet(f"{stats_dir}/b{bid}"))
+            _append_tier(spans, spans_dir, batch_id, 4)
+            _append_tier(bw, windows_dir, batch_id, 4)
+            _append_tier(bstats, stats_dir, batch_id, 1)
             if compact_every and batch_id > 0 \
                     and batch_id % compact_every == 0:
+                bid = int(batch_id)
                 _tier_compact(spark, windows_dir, bid, retention_batches)
                 _tier_compact(spark, stats_dir, bid, retention_batches)
                 _tier_compact(spark, spans_dir, bid, retain=False)
         finally:
-            try:
-                total.unpersist()
-            except NameError:
-                pass
-            bstats.unpersist()
-            bw.unpersist()
-            release_caches()
+            for df in held:
+                df.unpersist()
 
     writer = stream.writeStream.foreachBatch(ingest_batch)
     if checkpoint_dir:

@@ -55,6 +55,20 @@ def _batches_dir(store_dir: str) -> str:
     return f"{store_dir}/batches"
 
 
+def _base_state(spark: SparkSession, store_dir: str, cols: str):
+    """(base frame or None, its ``folded_through`` watermark or -1) —
+    the one read of the base a linear store's read and fold share."""
+    from airline_data_warehouse_spark.sources.atomic import _exists
+
+    base_path = _base_dir(store_dir)
+    if not _exists(spark, base_path):
+        return None, -1
+    base = (spark.read.schema(f"{cols}, folded_through long")
+            .parquet(base_path))
+    head = base.select("folded_through").first()
+    return base, (-1 if head is None else head["folded_through"])
+
+
 def _read_linear_state(spark: SparkSession, store_dir: str,
                        cols: str, keys: list[str],
                        val: str) -> DataFrame:
@@ -77,27 +91,20 @@ def _read_linear_state(spark: SparkSession, store_dir: str,
     same counts (the fold is content-preserving). The state is
     sketch-bounded, so the snapshot is cheap."""
     from airline_data_warehouse_spark.sources.atomic import (
-        _fs,
+        _exists,
         recover_directory,
     )
 
     last_err = None
     for attempt in range(2):
-        base_path = _base_dir(store_dir)
-        recover_directory(spark, base_path)
-        hpath, fs = _fs(spark, store_dir)  # Hadoop FS: non-local stores
-        watermark = -1
+        recover_directory(spark, _base_dir(store_dir))
         parts = []
         try:
-            if fs.exists(hpath(base_path)):
-                base = spark.read.schema(f"{cols}, folded_through long") \
-                                 .parquet(base_path)
-                head = base.select("folded_through").first()
-                if head is not None:
-                    watermark = head["folded_through"]
+            base, watermark = _base_state(spark, store_dir, cols)
+            if base is not None:
                 parts.append(base.select(*keys, val))
             bdir = _batches_dir(store_dir)
-            if fs.exists(hpath(bdir)):
+            if _exists(spark, bdir):
                 # explicit schema: a post-fold batches dir is EMPTY
                 # (every partition swept), where inference would throw;
                 # batch_id is the directory-derived partition column
@@ -186,13 +193,7 @@ def _fold_linear_state(spark: SparkSession, store_dir: str,
     base_path = _base_dir(store_dir)
     recover_directory(spark, base_path)
     hpath, fs = _fs(spark, store_dir)  # Hadoop FS API: non-local stores
-    watermark = -1
-    if fs.exists(hpath(base_path)):
-        head = (spark.read.schema(f"{cols}, folded_through long")
-                .parquet(base_path)
-                .select("folded_through").first())
-        if head is not None:
-            watermark = head["folded_through"]
+    _, watermark = _base_state(spark, store_dir, cols)
     bdir = _batches_dir(store_dir)
     if not fs.exists(hpath(bdir)):
         return watermark
@@ -291,14 +292,13 @@ def read_bloom_store(spark: SparkSession, store_dir: str) -> DataFrame:
     store stranded mid-compaction first (the store-reader convention),
     then de-duplicates across batch appends at read time."""
     from airline_data_warehouse_spark.sources.atomic import (
-        _fs,
+        _exists,
         recover_directory,
     )
 
     bdir = f"{store_dir}/bits"
     recover_directory(spark, bdir)
-    hpath, fs = _fs(spark, bdir)
-    if not fs.exists(hpath(bdir)):
+    if not _exists(spark, bdir):
         return spark.createDataFrame([], "bit int")
     return (spark.read.schema("bit int").parquet(bdir)
             .select("bit").distinct())
@@ -392,10 +392,9 @@ def _read_store_plan(spark: SparkSession,
                      store_dir: str) -> tuple[int, int, int] | None:
     """The pinned (offset, levels, branch_bits) sidecar, or None for a
     store without one (pre-r15 stores stay caller-trusted)."""
-    from airline_data_warehouse_spark.sources.atomic import _fs
+    from airline_data_warehouse_spark.sources.atomic import _exists
 
-    hpath, fs = _fs(spark, _plan_dir(store_dir))
-    if not fs.exists(hpath(_plan_dir(store_dir))):
+    if not _exists(spark, _plan_dir(store_dir)):
         return None
     row = (spark.read.schema("offset long, levels int, branch_bits int")
            .parquet(_plan_dir(store_dir)).collect())

@@ -76,6 +76,10 @@ def test_prefix_filter_boundary_subset_pair(spark):
     got = {(r["id1"], r["id2"]): r["jaccard"] for r in
            dd.prefix_filter_jaccard_pairs(df, k=1, threshold=0.6).collect()}
     assert got == {(1, 2): 0.6}
+    # a 7-dp threshold would prune in 6-dp units but verify on the raw
+    # float: refused, naming it
+    with pytest.raises(ValueError, match="0.6000001"):
+        dd.prefix_filter_jaccard_pairs(df, k=1, threshold=0.6000001)
 
 
 def test_containment_catches_jaccard_blind_inclusion(spark):
@@ -109,6 +113,8 @@ def test_containment_boundary_and_ties(spark):
     assert got[(2, 1)] == 1.0
     assert got[(3, 4)] == 0.8
     assert (4, 3) not in got  # unordered pair emitted exactly once
+    with pytest.raises(ValueError, match="0.8000001"):
+        dd.containment_pairs(df, k=1, threshold=0.8000001)
 
 
 def test_simhash_similarity(spark, near_dup_docs):

@@ -416,6 +416,41 @@ def test_stream_neardup_ingest_matches_batch_incremental(spark, tmp_path):
     assert got_b3 == expect
 
 
+def test_stream_neardup_ingest_keeps_other_queries_caches(spark, tmp_path):
+    """A near-dup stream batch frees only the caches it made: a frame
+    another query registered with dedup._persist stays cached across
+    batches that run the corpus join and its compute-once barrier."""
+    import json as jsonlib
+
+    from airline_data_warehouse_spark.operators import dedup as dd
+    from airline_data_warehouse_spark.streaming.dedup import (
+        start_neardup_ingest,
+    )
+
+    other = dd._persist(spark.range(10))
+    other.count()
+    text = ("the quick brown fox jumps over the lazy dog while the "
+            "market data pipeline keeps shuffling partitions")
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    src = (spark.readStream.schema("doc_id long, text string")
+           .option("maxFilesPerTrigger", 1).json(str(in_dir)))
+    q = start_neardup_ingest(src, str(tmp_path / "store"),
+                             checkpoint_dir=str(tmp_path / "ck"))
+    try:
+        for i in range(2):
+            with open(in_dir / f"b{i}.json", "w") as f:
+                f.write(jsonlib.dumps({"doc_id": i, "text": text}) + "\n")
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    try:
+        assert spark.read.parquet(str(tmp_path / "store/pairs")).count() == 1
+        assert other.is_cached
+    finally:
+        dd._release_one(other)
+
+
 def test_stream_neardup_retention_and_compaction(spark, tmp_path):
     """The r07 bounded-state knobs: with retention_batches=2, a doc from
     batch 0 is no longer matched by batch 3 (outside the horizon), and
